@@ -8,8 +8,8 @@ detection, and typed/format inconsistency rules — with two scale fixes
 - ALL metrics for a source are computed in ONE aggregation job (the
   reference runs one filter+collect job per rule and pulls every offending
   ID to the driver).
-- Offending IDs are collected as capped arrays via ``collect_list`` inside
-  the same pass (bounded driver memory), or skipped entirely with
+- Offending IDs are collected as capped lists, every rule's in one bounded
+  job (bounded driver and task memory), or skipped entirely with
   ``collect_ids=False`` at 100TB scale where violation *rows* should be
   written to a violations table instead (see :func:`violations`).
 
@@ -19,6 +19,8 @@ Column expressions — JVM-side, codegen-friendly, no Python UDFs.
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 from collections.abc import Sequence
 from dataclasses import dataclass, field
@@ -26,6 +28,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 ISO_DATE_RE = r"^\d{4}-\d{2}-\d{2}$"
 PHONE_RE = r"^[0-9.()\- ]*$"
@@ -129,6 +132,10 @@ def duplicate_column_groups(columns: Sequence[str]) -> dict[str, list[str]]:
     return {base: cols for base, cols in groups.items() if len(cols) > 1}
 
 
+def _quoted(name: str) -> Column:
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def audit(
     df: DataFrame,
     source: str,
@@ -137,43 +144,63 @@ def audit(
     collect_ids: bool = True,
     max_ids: int = 1000,
 ) -> AuditReport:
-    """Run the full audit in two full-table jobs (metrics pass + dedup
-    pass), plus — with ``collect_ids`` — one BOUNDED top-k job per
-    VIOLATED rule for its sample IDs.
+    """Run the full audit in two scans of the input: one aggregation for
+    every metric, and — with ``collect_ids`` and at least one VIOLATED rule
+    — one bounded job for all rules' sample IDs. Under AQE each query
+    stage runs as its own Spark job, so a handful of jobs in all, however
+    many rules are violated.
 
-    ``collect_ids`` caps offending-ID arrays at ``max_ids`` per rule,
-    returned in sorted order. The samples come from per-rule
-    orderBy+limit jobs (TakeOrderedAndProject: a max_ids-sized heap per
-    partition) instead of a collect_list sliced AFTER aggregation — the
-    slice bounded only the returned array, while the aggregation buffer
-    itself held EVERY violating ID on one reduce task (unbounded memory
-    at exactly the scale the audit targets; review finding). Set False
-    for pure counts."""
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__row_count")]
+    Duplicate rows are ``count - count(DISTINCT struct(all columns))``,
+    folded into the metrics aggregation; grouping normalizes floats, so
+    NaN/NaN and -0.0/0.0 rows are duplicates exactly as under
+    ``dropDuplicates``.
+
+    ``collect_ids`` caps offending-ID lists at ``max_ids`` per rule,
+    returned ascending with nulls first, duplicate rows repeated. One job
+    tags each violating row with its violated rules and keeps
+    ``row_number() over (partition by rule order by id) <= max_ids``.
+    Up to ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by
+    default) Spark applies that limit per partition before the shuffle,
+    so no task holds every violating ID (a collect_list sliced after
+    aggregation would — review finding); above it the window's row
+    buffer spills to disk instead. Set False for pure counts."""
+    aggs: list[Column] = [
+        F.count(F.lit(1)).alias("__row_count"),
+        F.count_distinct(F.struct(*[_quoted(c) for c in df.columns])).alias("__distinct"),
+    ]
     aggs += _missing_aggs(df, alias="__miss__{name}")
     for i, r in enumerate(rules):
         aggs.append(F.count(F.when(r.predicate, 1)).alias(f"__viol__{i}"))
     row = df.agg(*aggs).first()
 
-    # __row_count was just computed: subtracting from a fresh df.count()
-    # would re-scan the full input a third time (review finding)
-    dup_rows = row["__row_count"] - df.dropDuplicates().count()
+    violated = [i for i in range(len(rules)) if row[f"__viol__{i}"]]
+    samples: dict[int, list[tuple[int, object]]] = {}
+    if collect_ids and id_col is not None and violated:
+        hit = functools.reduce(operator.or_, (rules[i].predicate for i in violated))
+        by_rule = Window.partitionBy("__rule").orderBy(F.col("__id").asc_nulls_first())
+        for s in (
+            df.filter(hit)
+            .select(
+                F.col(id_col).alias("__id"),
+                F.explode(
+                    F.array(*[F.when(rules[i].predicate, F.lit(i)) for i in violated])
+                ).alias("__rule"),
+            )
+            .filter(F.col("__rule").isNotNull())
+            .withColumn("__rn", F.row_number().over(by_rule))
+            .filter(F.col("__rn") <= max_ids)
+            .collect()
+        ):
+            samples.setdefault(s["__rule"], []).append((s["__rn"], s["__id"]))
 
     inconsistencies: dict[str, dict] = {}
-    for i, r in enumerate(rules):
-        n = row[f"__viol__{i}"]
-        if n:
-            entry = {"expected": r.expected, "count": n}
-            if collect_ids and id_col is not None:
-                entry["error_ids"] = [
-                    x[0]
-                    for x in df.filter(r.predicate)
-                    .select(id_col)
-                    .orderBy(id_col)
-                    .limit(max_ids)
-                    .collect()
-                ]
-            inconsistencies[r.column] = entry
+    for i in violated:
+        r = rules[i]
+        entry = {"expected": r.expected, "count": row[f"__viol__{i}"]}
+        if collect_ids and id_col is not None:
+            ranked = sorted(samples.get(i, []), key=operator.itemgetter(0))
+            entry["error_ids"] = [x for _, x in ranked]
+        inconsistencies[r.column] = entry
 
     return AuditReport(
         source=source,
@@ -183,7 +210,7 @@ def audit(
             for f_ in df.schema.fields
             if row[f"__miss__{f_.name}"]
         },
-        duplicate_rows=dup_rows,
+        duplicate_rows=row["__row_count"] - row["__distinct"],
         duplicate_columns=duplicate_column_groups(df.columns),
         inconsistencies=inconsistencies,
     )

@@ -98,16 +98,23 @@ def get_spark(
 _TUNED_SESSIONS: set[int] = set()
 
 
+def session_token(spark: SparkSession) -> int:
+    """Identity of the underlying JVM session: two Python wrappers of one
+    JVM session share it, ``newSession()`` and a restarted session get
+    their own. Key for per-session memos (tune, the catalog's schemas)."""
+    try:
+        return spark._jsparkSession.hashCode()
+    except Exception:
+        return id(spark)
+
+
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to any session (including one we did
     not build, e.g. the verification driver's). Never raises. Memoized
     per underlying JVM session: catalog.table() calls this on EVERY load,
     which multiplied into dozens of redundant py4j conf/system-property
     round trips per suite enumeration (review finding)."""
-    try:
-        token = spark._jsparkSession.hashCode()
-    except Exception:
-        token = id(spark)
+    token = session_token(spark)
     if token in _TUNED_SESSIONS:
         return spark
     for k, v in RUNTIME_CONF.items():

@@ -63,7 +63,34 @@ def test_audit_report_shape(spark, dirty_sales):
     assert inc["Freight"]["count"] == 1 and inc["Freight"]["error_ids"] == [1]
     assert inc["UnitPrice"]["count"] == 1 and inc["UnitPrice"]["error_ids"] == [2]
     assert inc["Quantity"]["count"] == 3  # "0" non-positive + "-4" twice (dup)
+    assert inc["Quantity"]["error_ids"] == [2, 3, 3]  # the dup row keeps both IDs
     assert inc["ShipCountry"]["count"] == 2
+
+    # Float duplicates: NaN/NaN and -0.0/0.0 rows are duplicates exactly as
+    # dropDuplicates sees them; a null ID sorts first and violating
+    # duplicate rows keep their multiplicity.
+    nan = float("nan")
+    edge = spark.createDataFrame(
+        [
+            (10, nan, "-1"),
+            (10, nan, "-1"),
+            (11, -0.0, "2"),
+            (11, 0.0, "2"),
+            (None, 1.0, "-5"),
+            (None, 1.0, "-5"),
+            (12, 2.0, "3"),
+            (9, 2.0, "x"),
+        ],
+        "id int, amt double, qty string",
+    )
+    rep = audit(edge, "edge", id_col="id", rules=[rule_positive_number("qty", "int")])
+    assert rep.row_count == 8
+    assert rep.duplicate_rows == edge.count() - edge.dropDuplicates().count() == 3
+    assert rep.missing_values == {"id": 2, "amt": 2}
+    assert rep.inconsistencies["qty"]["count"] == 5
+    assert rep.inconsistencies["qty"]["error_ids"] == [None, None, 9, 10, 10]
+    capped = audit(edge, "edge", id_col="id", rules=[rule_positive_number("qty", "int")], max_ids=3)
+    assert capped.inconsistencies["qty"]["error_ids"] == [None, None, 9]
 
 
 def test_violations_table(spark, dirty_sales):
